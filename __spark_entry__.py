@@ -58,7 +58,7 @@ _SHIPPED: set = set()
 def _ensure_workers(spark: SparkSession) -> None:
     """Ship the docling_spark package to Spark's Python workers — the
     driver's sys.path does NOT propagate to worker processes, so any
-    mapInPandas closure referencing the package needs the zip on the
+    mapInArrow closure referencing the package needs the zip on the
     session's pyFiles (the spark-submit --py-files equivalent, applied
     programmatically so the driver harness needs no special setup)."""
     key = id(spark.sparkContext)
@@ -123,40 +123,17 @@ def _normalized_path(sf_dir: str) -> str:
     import pyarrow.parquet as pq
 
     from docling_spark.pipeline import extract_document_safe
+    from docling_spark.schema import spans_array
 
     corpus = _corpus_path(sf_dir)
     base = os.path.basename(corpus).replace("corpus", "norm").rsplit(".", 1)[0]
     path = f"/tmp/docling_spark_{base}_{_engine_version()}.parquet"
     if os.path.exists(path):
         return path
-    tbl = pq.read_table(corpus)
-    span_type = pa.list_(
-        pa.struct(
-            [
-                ("kind", pa.string()),
-                ("text", pa.string()),
-                ("media_ref", pa.string()),
-                ("offset", pa.int32()),
-            ]
-        )
-    )
-    doc_ids, spans_col = [], []
-    for row in sorted(tbl.to_pylist(), key=lambda r: r["doc_id"]):
-        raw = [
-            (s["kind"], s["text"], s["media_ref"])
-            for s in sorted(row["spans"], key=lambda s: s["offset"])
-        ]
-        normalized = extract_document_safe(raw)
-        doc_ids.append(row["doc_id"])
-        spans_col.append(
-            [
-                {"kind": k, "text": t, "media_ref": r, "offset": i}
-                for i, (k, t, r) in enumerate(normalized)
-            ]
-        )
+    docs = _ordered_corpus(corpus)
     out = pa.table(
-        {"doc_id": pa.array(doc_ids, pa.string()),
-         "spans": pa.array(spans_col, span_type)}
+        {"doc_id": pa.array([d for d, _ in docs], pa.string()),
+         "spans": spans_array(extract_document_safe(raw) for _, raw in docs)}
     )
     tmp = path + ".tmp"
     pq.write_table(out, tmp)
@@ -164,61 +141,51 @@ def _normalized_path(sf_dir: str) -> str:
     return path
 
 
+def _ordered_corpus(corpus: str) -> list:
+    """The corpus parquet as (doc_id, raw span tuples) pairs, docs ordered
+    by doc_id and spans by offset."""
+    import pyarrow.parquet as pq
+
+    return [
+        (row["doc_id"],
+         [(s["kind"], s["text"], s["media_ref"])
+          for s in sorted(row["spans"], key=lambda s: s["offset"])])
+        for row in sorted(pq.read_table(corpus).to_pylist(), key=lambda r: r["doc_id"])
+    ]
+
+
 def _formatted_path(sf_dir: str) -> str:
     """Deterministic FORMATTED span corpus (extract_html_formatted's
     output: doc_id, spans, index-aligned fmt flags) as a parquet file the
     formatted-sink oracles can read — built Spark-free via the same
-    per-document flattening the mapInPandas stage runs, so the DuckDB
-    render verifies the distributed execution end to end."""
+    per-document function the mapInArrow stage runs
+    (pipeline.extract_formatted_document), so the DuckDB render verifies
+    the distributed execution end to end."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from docling_spark.operators.html_extract import extract_html_spans
-    from docling_spark.pipeline import _as_tuples
+    from docling_spark.pipeline import extract_formatted_document
+    from docling_spark.schema import spans_array
 
     corpus = _corpus_path(sf_dir)
     base = os.path.basename(corpus).replace("corpus", "fmtnorm").rsplit(".", 1)[0]
     path = f"/tmp/docling_spark_{base}_{_engine_version()}.parquet"
     if os.path.exists(path):
         return path
-    tbl = pq.read_table(corpus)
-    span_type = pa.list_(
-        pa.struct(
-            [
-                ("kind", pa.string()),
-                ("text", pa.string()),
-                ("media_ref", pa.string()),
-                ("offset", pa.int32()),
-            ]
-        )
-    )
-    doc_ids, spans_col, fmt_col = [], [], []
-    for row in sorted(tbl.to_pylist(), key=lambda r: r["doc_id"]):
-        ordered = sorted(row["spans"], key=lambda s: s["offset"])
-        flat = []
-        for kind, text, ref in _as_tuples(ordered):
-            if kind == "html_bytes":
-                flat.extend(extract_html_spans(text, with_formatting=True))
-            else:
-                flat.append((kind, text, ref, ""))
+    docs = _ordered_corpus(corpus)
+    flats = [extract_formatted_document(raw) for _, raw in docs]
+    for flat in flats:
         for _k, t, _r, _f in flat:
             # precondition for the SQL short-form underscore escape (the
             # oracle uses replace(text,'_','\_'); exact only when no
             # backslashes / markdown image patterns appear) — fail loudly
             # if the corpus grammar ever grows them
             assert "\\" not in t and "![" not in t, t
-        doc_ids.append(row["doc_id"])
-        spans_col.append(
-            [
-                {"kind": k, "text": t, "media_ref": r, "offset": i}
-                for i, (k, t, r, _f) in enumerate(flat)
-            ]
-        )
-        fmt_col.append([f for (_k, _t, _r, f) in flat])
     out = pa.table(
-        {"doc_id": pa.array(doc_ids, pa.string()),
-         "spans": pa.array(spans_col, span_type),
-         "fmt": pa.array(fmt_col, pa.list_(pa.string()))}
+        {"doc_id": pa.array([d for d, _ in docs], pa.string()),
+         "spans": spans_array(flats),
+         "fmt": pa.array([[f for (_k, _t, _r, f) in flat] for flat in flats],
+                         pa.list_(pa.string()))}
     )
     tmp = path + ".tmp"
     pq.write_table(out, tmp)

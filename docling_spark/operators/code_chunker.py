@@ -42,8 +42,8 @@ C falls back to a documented brace-matching top-level function splitter
 (same output schema, no import/variable context).
 
 Spark shape: one zero-shuffle mapInPandas over (doc_id, language, code) —
-identical to the serializer sinks; chunking is a per-document fold, so it
-partitions embarrassingly at 100 TB.
+the same narrow per-document shape as the serializer sinks; chunking is a
+per-document fold, so it partitions embarrassingly at 100 TB.
 """
 
 from __future__ import annotations
@@ -874,7 +874,7 @@ def chunk_code_document(doc_id: str, language: str, code: str,
 def code_chunk_sink(df, id_col: str = "doc_id", lang_col: str = "language",
                     code_col: str = "code", max_tokens: int = 5000):
     """(doc_id, language, code) → code-chunk table. Zero-shuffle
-    mapInPandas, like every sink."""
+    mapInPandas over the code column (it carries no spans to marshal)."""
 
     def gen(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         cols = ["doc_id", "chunk_id", "part_name", "chunk_type", "start_line",

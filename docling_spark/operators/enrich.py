@@ -16,11 +16,9 @@ the unenriched output.
 from __future__ import annotations
 
 import re
-from typing import Iterable, Iterator, List, Optional, Tuple
+from typing import List, Optional, Tuple
 
-import pandas as pd
-
-from docling_spark.schema import DOC_DDL
+from docling_spark.schema import DOC_DDL, map_docs
 
 Span = Tuple[str, str, Optional[str]]
 
@@ -93,21 +91,4 @@ def enrich_document(spans: List[Span]) -> List[Span]:
 
 def enrich(df):
     """Spark wrapper: normalized docs → enriched docs (same shape, narrow)."""
-
-    def gen(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_spans = []
-            for spans in pdf["spans"]:
-                res = enrich_document(
-                    [(s["kind"], s["text"], s["media_ref"]) for s in
-                     ([] if spans is None else list(spans))]
-                )
-                out_spans.append(
-                    [
-                        {"kind": k, "text": t, "media_ref": r, "offset": i}
-                        for i, (k, t, r) in enumerate(res)
-                    ]
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].values, "spans": out_spans})
-
-    return df.mapInPandas(gen, schema=DOC_DDL)
+    return map_docs(df, DOC_DDL, lambda doc_id, spans: [(doc_id, enrich_document(spans))])

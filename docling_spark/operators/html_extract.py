@@ -9,7 +9,7 @@ one HTML payload into the flat `(kind, text, media_ref)` span stream that the
 hierarchy state machine consumes — identical in role to docling's HTML
 backend, original in implementation.
 
-Runs document-batched inside mapInPandas: one call per HTML payload, many
+Runs document-batched inside mapInArrow: one call per HTML payload, many
 payloads per Arrow batch — never per inner element across rows.
 """
 

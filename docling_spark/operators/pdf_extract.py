@@ -10,7 +10,7 @@ Reproduces the reference's fragmented-PDF handling, originally in
   backfill + re-sort by item number (897-972).
 
 Pure per-document function: list of raw spans in → list of normalized spans
-out. Called from the pipeline's mapInPandas batch loop.
+out. Called from the pipeline's mapInArrow batch loop.
 """
 
 from __future__ import annotations

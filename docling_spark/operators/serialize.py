@@ -2,9 +2,9 @@
 §2.8 C7-C10, §2.9 K1/K5).
 
 Markdown rendering and law-level chunking over the *normalized* span table.
-Both are per-document-local → same zero-shuffle mapInPandas shape as the
-extraction pipeline; the chunk table then explodes to one row per chunk
-(narrow generate, still no exchange).
+Both are per-document-local → the same zero-shuffle mapInArrow shape as the
+extraction pipeline (schema.map_docs); the chunk table emits one row per
+chunk from the same narrow stage (still no exchange).
 
 Reference semantics mirrored (original implementation):
 - markdown walk with #/##/### headings, bold markers, pipe tables
@@ -22,7 +22,7 @@ from typing import Iterable, Iterator, List, Optional, Tuple
 
 import pandas as pd
 
-from docling_spark.schema import CHUNK_DDL
+from docling_spark.schema import CHUNK_DDL, map_docs
 
 Span = Tuple[str, str, Optional[str]]
 
@@ -303,46 +303,17 @@ def render_markdown(spans: List[Span],
     return "\n".join(out).strip() + "\n"
 
 
-
-
-def _iter_spans(spans):
-    # Arrow hands array<struct> to pandas as a numpy array of dicts (or None)
-    return [] if spans is None else list(spans)
-
-def _spans_with_optional_fmt(pdf: pd.DataFrame):
-    """Yield per-doc span tuple lists, zipping an `fmt` column (array<string>
-    index-aligned with spans — the optional formatting channel; the
-    normalized `spans` struct itself stays the BASELINE 4-field shape) when
-    the frame carries one."""
-    has_fmt = "fmt" in pdf.columns
-    for i, spans in enumerate(pdf["spans"]):
-        ss = _iter_spans(spans)
-        if has_fmt:
-            raw_fmt = pdf["fmt"].iloc[i]
-            fmts = [] if raw_fmt is None else list(raw_fmt)
-            fmts += [""] * (len(ss) - len(fmts))
-            yield [
-                (s["kind"], s["text"], s["media_ref"], fmts[j])
-                for j, s in enumerate(ss)
-            ]
-        else:
-            yield [(s["kind"], s["text"], s["media_ref"]) for s in ss]
-
-
 def markdown_sink(df, page_break_placeholder: "str | None" = None):
     """normalized documents → (doc_id, markdown). An optional `fmt` column
     (array<string> aligned with spans, flags ⊆ "BIUS") switches the spans it
     marks to docling-core-rule formatted rendering. `page_break_placeholder`
     renders 'page_break' spans as that block (reference
     MarkdownParams.page_break_placeholder); None (default) drops them."""
-
-    def gen(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            md = [render_markdown(ss, page_break_placeholder)
-                  for ss in _spans_with_optional_fmt(pdf)]
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].values, "markdown": md})
-
-    return df.mapInPandas(gen, schema="doc_id string, markdown string")
+    return map_docs(
+        df, "doc_id string, markdown string",
+        lambda doc_id, spans: [(doc_id, render_markdown(spans, page_break_placeholder))],
+        with_fmt=True,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -514,15 +485,10 @@ def render_html(spans: List[Span]) -> str:
 
 
 def html_sink(df):
-    """normalized documents → (doc_id, html). Same zero-shuffle mapInPandas
+    """normalized documents → (doc_id, html). Same zero-shuffle mapInArrow
     shape as markdown_sink; honors the same optional `fmt` column."""
-
-    def gen(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rendered = [render_html(ss) for ss in _spans_with_optional_fmt(pdf)]
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].values, "html": rendered})
-
-    return df.mapInPandas(gen, schema="doc_id string, html string")
+    return map_docs(df, "doc_id string, html string",
+                    lambda doc_id, spans: [(doc_id, render_html(spans))], with_fmt=True)
 
 
 # ---------------------------------------------------------------------------
@@ -706,15 +672,10 @@ def render_latex(spans: List[Span]) -> str:
 
 
 def latex_sink(df):
-    """normalized documents → (doc_id, latex). Zero-shuffle mapInPandas;
+    """normalized documents → (doc_id, latex). Zero-shuffle mapInArrow;
     honors the same optional `fmt` column as markdown_sink/html_sink."""
-
-    def gen(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rendered = [render_latex(ss) for ss in _spans_with_optional_fmt(pdf)]
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].values, "latex": rendered})
-
-    return df.mapInPandas(gen, schema="doc_id string, latex string")
+    return map_docs(df, "doc_id string, latex string",
+                    lambda doc_id, spans: [(doc_id, render_latex(spans))], with_fmt=True)
 
 
 # ---------------------------------------------------------------------------
@@ -807,19 +768,9 @@ def render_doctags(spans: List[Span]) -> str:
 
 
 def doctags_sink(df):
-    """normalized documents → (doc_id, doctags). Zero-shuffle mapInPandas."""
-
-    def gen(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rendered = [
-                render_doctags(
-                    [(s["kind"], s["text"], s["media_ref"]) for s in _iter_spans(spans)]
-                )
-                for spans in pdf["spans"]
-            ]
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].values, "doctags": rendered})
-
-    return df.mapInPandas(gen, schema="doc_id string, doctags string")
+    """normalized documents → (doc_id, doctags). Zero-shuffle mapInArrow."""
+    return map_docs(df, "doc_id string, doctags string",
+                    lambda doc_id, spans: [(doc_id, render_doctags(spans))])
 
 
 # ---------------------------------------------------------------------------
@@ -947,50 +898,18 @@ def export_chunks(chunks: List[tuple], fmt: str) -> str:
 def chunk_export_sink(df, fmt: str, level: str = "odsek"):
     """normalized documents → (doc_id, payload) in the chosen export format
     ('json' | 'md' | 'rag'). Document-local: chunking + formatting fuse into
-    the same zero-shuffle mapInPandas stage (the reference writes one file
+    the same zero-shuffle mapInArrow stage (the reference writes one file
     per law; the Spark-native form is one payload row per doc, written by
     the caller's sink of choice)."""
-
-    def gen(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = [
-                export_chunks(
-                    chunk_document(
-                        doc_id,
-                        [(s["kind"], s["text"], s["media_ref"]) for s in _iter_spans(spans)],
-                        level,
-                    ),
-                    fmt,
-                )
-                for doc_id, spans in zip(pdf["doc_id"], pdf["spans"])
-            ]
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].values, "payload": payloads})
-
-    return df.mapInPandas(gen, schema="doc_id string, payload string")
+    return map_docs(
+        df, "doc_id string, payload string",
+        lambda doc_id, spans: [(doc_id, export_chunks(chunk_document(doc_id, spans, level), fmt))],
+    )
 
 
 def chunk_sink(df, level: str = "odsek"):
     """normalized documents → chunk table (CHUNK_DDL), one row per chunk."""
-
-    def gen(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: List[tuple] = []
-            for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
-                rows.extend(
-                    chunk_document(
-                        doc_id,
-                        [(s["kind"], s["text"], s["media_ref"]) for s in _iter_spans(spans)],
-                        level,
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "chunk_id", "level", "content", "headings", "content_length",
-                ],
-            )
-
-    return df.mapInPandas(gen, schema=CHUNK_DDL)
+    return map_docs(df, CHUNK_DDL, lambda doc_id, spans: chunk_document(doc_id, spans, level))
 
 
 # ---------------------------------------------------------------------------
@@ -1222,9 +1141,9 @@ def render_azure(payload: str, indent: "int | None" = None) -> str:
 
 def azure_sink(df, json_col: str = "payload", indent: "int | None" = None):
     """(doc_id, payload docling-JSON) → (doc_id, azure). Zero-shuffle
-    mapInPandas, like every other sink; per-doc payload parse + accumulator
-    fold is the serializer itself (the reference's is the same per-document
-    fold over pydantic objects)."""
+    mapInPandas over the payload column (it carries no spans to marshal);
+    per-doc payload parse + accumulator fold is the serializer itself (the
+    reference's is the same per-document fold over pydantic objects)."""
 
     def gen(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

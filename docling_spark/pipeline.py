@@ -5,9 +5,9 @@ Spark plan
 Every stage (sniff → HTML/PDF normalize → hierarchy state machine) is
 document-local, so the whole pipeline compiles to **one narrow mapInArrow
 stage over the scan: zero shuffles** (per the input_hint contract:
-vectorized pandas/Arrow UDFs only — Arrow-native marshaling is the faster
-half of that contract; the mapInPandas form is kept equivalence-tested).
-At 100 TB that means:
+vectorized pandas/Arrow UDFs only — every span stage uses the Arrow-native
+half of that contract, through the one marshaling path in
+docling_spark.schema). At 100 TB that means:
 
 - parallelism = input splits (`spark.sql.files.maxPartitionBytes`), no
   exchange, no skewed reducer;
@@ -25,36 +25,20 @@ pandas/Arrow UDFs, no per-row Python UDFs in the plan).
 
 from __future__ import annotations
 
-from typing import Iterable, Iterator, List, Optional, Tuple
-
-import pandas as pd
+from typing import List, Optional, Tuple
 
 from docling_spark.operators import sniff
 from docling_spark.operators.hierarchy import reconstruct
 from docling_spark.operators.html_extract import extract_html_spans
 from docling_spark.operators.pdf_extract import normalize_pdf_spans
-from docling_spark.schema import DOC_DDL
+from docling_spark.schema import DOC_DDL, doc_spans, map_docs, spans_array
 
 Span = Tuple[str, str, Optional[str]]
 
 
-def _as_tuples(raw_spans) -> List[Span]:
-    """Arrow hands array<struct> to pandas as a sequence of dicts (or None)."""
-    out: List[Span] = []
-    if raw_spans is None:
-        return out
-    for s in raw_spans:
-        if s is None:
-            continue
-        if isinstance(s, dict):
-            out.append((s.get("kind") or "", s.get("text") or "", s.get("media_ref")))
-        else:  # tuple/Row-like: (kind, text, media_ref[, offset])
-            out.append((s[0] or "", s[1] or "", s[2]))
-    return out
-
-
-def extract_document(raw_spans, emit_page_breaks: bool = False) -> List[Span]:
-    """Sniff one document and run the matching normalization path.
+def extract_document(raw_spans: List[Span], emit_page_breaks: bool = False) -> List[Span]:
+    """Sniff one document's (kind, text, media_ref) spans and run the
+    matching normalization path.
 
     `emit_page_breaks=True` threads the PDF path's page boundaries into the
     span stream as 'page_break' spans (see normalize_pdf_spans), which
@@ -63,23 +47,22 @@ def extract_document(raw_spans, emit_page_breaks: bool = False) -> List[Span]:
     span-sequence contract unchanged (HTML/stream sources carry no page
     provenance, matching the reference where only paginated sources emit
     page-break nodes)."""
-    spans = _as_tuples(raw_spans)
-    fmt = sniff.sniff_doc(spans)
+    fmt = sniff.sniff_doc(raw_spans)
     if fmt == sniff.HTML:
         flat: List[Span] = []
-        for kind, text, ref in spans:
+        for kind, text, ref in raw_spans:
             if kind == "html_bytes":
                 flat.extend(extract_html_spans(text))
             else:
                 flat.append((kind, text, ref))
         return reconstruct(flat)
     if fmt == sniff.PDF_LIKE:
-        return normalize_pdf_spans(spans, emit_page_breaks=emit_page_breaks)
+        return normalize_pdf_spans(raw_spans, emit_page_breaks=emit_page_breaks)
     # docling stream (or unknown → treated as pre-parsed stream)
-    return reconstruct(spans)
+    return reconstruct(raw_spans)
 
 
-def extract_document_safe(raw_spans) -> List[Span]:
+def extract_document_safe(raw_spans: List[Span]) -> List[Span]:
     """Per-document fault isolation: at 10^12 docs one malformed document
     must not fail its whole task/partition — it emits a single `error` span
     (kind in the closed set, surfaced by the kind-histogram metrics and
@@ -91,21 +74,18 @@ def extract_document_safe(raw_spans) -> List[Span]:
         return [("error", f"{type(exc).__name__}: {exc}"[:500], None)]
 
 
-def _extract_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-    out_spans = []
-    for raw in pdf["spans"]:
-        normalized = extract_document_safe(raw)
-        out_spans.append(
-            [
-                {"kind": k, "text": t, "media_ref": r, "offset": i}
-                for i, (k, t, r) in enumerate(normalized)
-            ]
-        )
-    result = pd.DataFrame({"doc_id": pdf["doc_id"].values, "spans": out_spans})
-    for extra in pdf.columns:
-        if extra not in ("doc_id", "spans"):
-            result[extra] = pdf[extra].values
-    return result
+def extract_formatted_document(raw_spans: List[Span]) -> List[Tuple[str, str, Optional[str], str]]:
+    """One document's raw spans → the flat formatted span stream: each
+    html_bytes payload expands to (kind, text, media_ref, fmt) spans with
+    inline-formatting flags (⊆ "BIUS"); every other span passes through with
+    empty flags."""
+    flat: List[Tuple[str, str, Optional[str], str]] = []
+    for kind, text, ref in raw_spans:
+        if kind == "html_bytes":
+            flat.extend(extract_html_spans(text, with_formatting=True))
+        else:
+            flat.append((kind, text, ref, ""))
+    return flat
 
 
 def extract_html_formatted(df):
@@ -120,97 +100,24 @@ def extract_html_formatted(df):
     Flat stream by design: the hierarchy state machine merges spans, which
     collapses per-item formatting (docling has the same per-TextItem
     granularity — document.py:1617-1639). Same narrow zero-shuffle
-    mapInPandas shape as `extract`. Non-HTML span kinds pass through with
-    empty flags."""
-    schema = DOC_DDL + ", fmt array<string>"
+    mapInArrow shape as `extract`; per document it runs
+    extract_formatted_document."""
 
-    def gen(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            out_spans, out_fmt = [], []
-            for raw in pdf["spans"]:
-                flat: List[tuple] = []
-                for kind, text, ref in _as_tuples(raw):
-                    if kind == "html_bytes":
-                        flat.extend(extract_html_spans(text, with_formatting=True))
-                    else:
-                        flat.append((kind, text, ref, ""))
-                out_spans.append(
-                    [
-                        {"kind": k, "text": t, "media_ref": r, "offset": i}
-                        for i, (k, t, r, _f) in enumerate(flat)
-                    ]
-                )
-                out_fmt.append([f for (_k, _t, _r, f) in flat])
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].values, "spans": out_spans, "fmt": out_fmt}
-            )
+    def per_doc(doc_id, raw_spans):
+        flat = extract_formatted_document(raw_spans)
+        return [(doc_id, flat, [f for (_k, _t, _r, f) in flat])]
 
-    return df.mapInPandas(gen, schema=schema)
-
-
-def extract_pandas(df, extra_cols: str = ""):
-    """mapInPandas form of the extraction stage (kept for the arrow≡pandas
-    equivalence test; `extract` below is the production path)."""
-    schema = DOC_DDL + extra_cols
-
-    def gen(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf):
-                yield _extract_batch(pdf)
-
-    return df.mapInPandas(gen, schema=schema)
+    return map_docs(df, DOC_DDL + ", fmt array<string>", per_doc)
 
 
 def _extract_record_batch(rb, declared_extra=None):
-    """One Arrow RecordBatch of documents → one normalized RecordBatch.
-
-    Bulk columnar marshaling: the span struct's child arrays convert to
-    Python lists in three vectorized calls (no per-row dict materialization
-    — the pandas path builds a dict per span, which at ~130 output spans/doc
-    dominated worker CPU), per-doc slices are zipped into the tuples the
-    state machine consumes, and the output is assembled as flat arrays +
-    list offsets."""
+    """One Arrow RecordBatch of documents → one normalized RecordBatch,
+    marshaled by schema.doc_spans / schema.spans_array (bulk columnar both
+    ways, no per-span dicts)."""
     import pyarrow as pa
-    import pyarrow.compute as pc
 
     names = rb.schema.names
-    la = rb.column(names.index("spans"))
-    lengths = pc.list_value_length(la).to_pylist()
-    vals = la.flatten()  # logical concatenation in row order
-    kinds = vals.field("kind").to_pylist()
-    texts = vals.field("text").to_pylist()
-    refs = vals.field("media_ref").to_pylist()
-
-    out_k: List[str] = []
-    out_t: List[str] = []
-    out_r: List[Optional[str]] = []
-    out_o: List[int] = []
-    offsets = [0]
-    lo = 0
-    for length in lengths:
-        length = length or 0
-        hi = lo + length
-        normalized = extract_document_safe(list(zip(kinds[lo:hi], texts[lo:hi], refs[lo:hi])))
-        lo = hi
-        for j, (k, t, r) in enumerate(normalized):
-            out_k.append(k)
-            out_t.append(t)
-            out_r.append(r)
-            out_o.append(j)
-        offsets.append(len(out_k))
-
-    struct = pa.StructArray.from_arrays(
-        [
-            pa.array(out_k, pa.string()),
-            pa.array(out_t, pa.string()),
-            pa.array(out_r, pa.string()),
-            pa.array(out_o, pa.int32()),
-        ],
-        ["kind", "text", "media_ref", "offset"],
-    )
-    out_spans = pa.ListArray.from_arrays(pa.array(offsets, pa.int32()), struct)
+    out_spans = spans_array(extract_document_safe(spans) for spans in doc_spans(rb))
     # emit in declared-schema order: doc_id, spans, then passthrough columns
     # ordered by the DECLARED extra-col names (mapInArrow binds positionally;
     # emitting in input-batch order would silently mislabel a caller whose
@@ -264,7 +171,7 @@ def extract_full(df):
     """The full flagship path: extract (sniff → HTML/PDF normalize →
     hierarchy state machine) followed by J4 paragraph enrichment
     (operators.enrich — re-extracts embedded pismeno runs into synthetic
-    odseks). Still one narrow zero-shuffle chain: mapInArrow → mapInPandas.
+    odseks). Still one narrow zero-shuffle chain: mapInArrow → mapInArrow.
     Annex integration (J5) composes on top via
     sources.readers.integrate_annexes(extract_full(df), manifest) — it
     returns an audit table, not the span shape, so it stays a separate

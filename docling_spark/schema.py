@@ -13,6 +13,8 @@ Reference data model this flattens (cited for parity, not ported):
 
 from __future__ import annotations
 
+from typing import Callable, Iterable, Iterator, List, Sequence
+
 from pyspark.sql import types as T
 
 # ---------------------------------------------------------------------------
@@ -35,9 +37,107 @@ DOC_SCHEMA = T.StructType(
     ]
 )
 
-# DDL forms (for mapInPandas / applyInPandas signatures)
+# DDL forms (for mapInArrow / mapInPandas signatures)
 SPAN_DDL = "kind string, text string, media_ref string, offset int"
 DOC_DDL = f"doc_id string, spans array<struct<{SPAN_DDL}>>"
+
+# ---------------------------------------------------------------------------
+# Span marshaling: the one place that converts between the Arrow `spans`
+# column and the per-document (kind, text, media_ref) tuple lists every
+# per-document function consumes. Bulk columnar both ways: three child-array
+# to_pylist calls in, flat arrays + list offsets out — no per-span dicts.
+# ---------------------------------------------------------------------------
+
+
+def doc_spans(rb, with_fmt: bool = False) -> Iterator[List[tuple]]:
+    """A RecordBatch's `spans` column → one (kind, text, media_ref) tuple
+    list per row, in row order (NULL spans → []).
+
+    `with_fmt` and an `fmt` column (array<string>, index-aligned inline
+    formatting flags) → 4-tuples carrying each span's flag; a NULL or short
+    `fmt` array pads with ""."""
+    import pyarrow.compute as pc
+
+    names = rb.schema.names
+    la = rb.column(names.index("spans"))
+    vals = la.flatten()  # logical concatenation in row order, NULLs skipped
+    kinds = vals.field("kind").to_pylist()
+    texts = vals.field("text").to_pylist()
+    refs = vals.field("media_ref").to_pylist()
+    fmts = (
+        rb.column(names.index("fmt")).to_pylist()
+        if with_fmt and "fmt" in names
+        else None
+    )
+    lo = 0
+    for i, length in enumerate(pc.list_value_length(la).to_pylist()):
+        hi = lo + (length or 0)
+        spans = zip(kinds[lo:hi], texts[lo:hi], refs[lo:hi])
+        if fmts is None:
+            yield list(spans)
+        else:
+            flags = list(fmts[i] or [])
+            flags += [""] * (hi - lo - len(flags))
+            yield [(k, t, r, f) for (k, t, r), f in zip(spans, flags)]
+        lo = hi
+
+
+def spans_array(docs: Iterable[Sequence[tuple]]):
+    """Per-document span tuple lists → the `spans` ListArray, each span's
+    `offset` = its position in the document. Fields past media_ref (the
+    formatted stream's flag) are ignored."""
+    import pyarrow as pa
+
+    flat: List[tuple] = []
+    positions: List[int] = []
+    offsets = [0]
+    for spans in docs:
+        flat.extend(spans)
+        positions.extend(range(len(spans)))
+        offsets.append(len(flat))
+    struct = pa.StructArray.from_arrays(
+        [
+            pa.array([s[0] for s in flat], pa.string()),
+            pa.array([s[1] for s in flat], pa.string()),
+            pa.array([s[2] for s in flat], pa.string()),
+            pa.array(positions, pa.int32()),
+        ],
+        ["kind", "text", "media_ref", "offset"],
+    )
+    return pa.ListArray.from_arrays(pa.array(offsets, pa.int32()), struct)
+
+
+def map_docs(df, ddl: str, per_doc: Callable[[str, List[tuple]], Iterable[tuple]],
+             with_fmt: bool = False):
+    """Run `per_doc(doc_id, spans)` over every document of `df` as one narrow
+    mapInArrow stage (zero shuffles). `per_doc` returns the document's output
+    rows as tuples in `ddl` column order; a `spans` output column takes a
+    span tuple list and is built by spans_array. `with_fmt` as in
+    doc_spans."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
+    out_schema = to_arrow_schema(_parse_datatype_string(ddl))
+
+    def gen(batches):
+        for rb in batches:
+            ids = rb.column(rb.schema.names.index("doc_id")).to_pylist()
+            rows = [
+                row
+                for doc_id, spans in zip(ids, doc_spans(rb, with_fmt))
+                for row in per_doc(doc_id, spans)
+            ]
+            cols = list(zip(*rows)) or [()] * len(out_schema)
+            yield pa.RecordBatch.from_arrays(
+                [
+                    spans_array(col) if field.name == "spans" else pa.array(col, field.type)
+                    for col, field in zip(cols, out_schema)
+                ],
+                out_schema.names,
+            )
+
+    return df.mapInArrow(gen, schema=ddl)
 
 # Raw ingest kinds (FIXTURES.md §1)
 RAW_KINDS = {

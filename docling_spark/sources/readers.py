@@ -21,7 +21,7 @@ from typing import List, Optional
 import yaml
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
-from docling_spark.schema import DOC_SCHEMA
+from docling_spark.schema import DOC_DDL, DOC_SCHEMA, spans_array
 
 _GRAPH_ITEM_ARRAY = T.ArrayType(
     T.StructType(
@@ -481,20 +481,18 @@ def parse_doctags(payload: str):
 def read_doctags(df: DataFrame, payload_col: str = "doctags",
                  id_col: str = "doc_id") -> DataFrame:
     """(doc_id, doctags string) → (doc_id, spans) in the canonical 4-field
-    shape. Document-local parse → narrow mapInPandas, zero shuffle."""
-    import pandas as pd
+    shape. Document-local parse → narrow mapInArrow, zero shuffle."""
+    import pyarrow as pa
 
     def gen(batches):
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
-                spans = [
-                    {"kind": k, "text": t, "media_ref": r, "offset": i}
-                    for i, (k, t, r) in enumerate(parse_doctags(payload))
-                ]
-                rows.append((str(mid), spans))
-            yield pd.DataFrame(rows, columns=["doc_id", "spans"])
+        for rb in batches:
+            names = rb.schema.names
+            ids = rb.column(names.index(id_col)).to_pylist()
+            payloads = rb.column(names.index(payload_col)).to_pylist()
+            yield pa.RecordBatch.from_arrays(
+                [pa.array([str(i) for i in ids], pa.string()),
+                 spans_array(parse_doctags(p) for p in payloads)],
+                ["doc_id", "spans"],
+            )
 
-    from docling_spark.schema import DOC_DDL
-
-    return df.mapInPandas(gen, schema=DOC_DDL)
+    return df.mapInArrow(gen, schema=DOC_DDL)

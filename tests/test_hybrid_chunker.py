@@ -161,3 +161,35 @@ def test_tokenizer_hook_falls_back(monkeypatch):
     assert hc.count_tokens("x1!") == 3  # letters / digits / punct split
     monkeypatch.setattr(hc, "_HF_TRIED", False)
     monkeypatch.setattr(hc, "_HF_TOKENIZER", None)
+
+
+def test_k4_merge_recounts_under_non_additive_tokenizer(monkeypatch):
+    # an HF tokenizer is not additive across the "\n" merge delimiter; this
+    # fake charges 3 tokens per newline, so summing the pieces' stored
+    # counts undercounts every merged chunk
+    import re
+
+    import docling_spark.operators.hybrid_chunker as hc
+
+    class _Encoding:
+        def __init__(self, n):
+            self.ids = list(range(n))
+
+    class _NewlineHeavyTokenizer:
+        def encode(self, text):
+            n = len(re.findall(r"[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\s]", text))
+            return _Encoding(n + 3 * text.count("\n"))
+
+    monkeypatch.setattr(hc, "_HF_TOKENIZER", _NewlineHeavyTokenizer())
+    monkeypatch.setattr(hc, "_HF_TRIED", True)
+    spans = [("paragraph", "§ 1", "#paragraf-1")]
+    for i, n_words in enumerate([9, 9, 13, 13, 5, 5, 5], start=1):
+        ref = f"#paragraf-1.odsek-{i}"
+        spans += [("odsek", f"({i})", ref), ("text", " ".join(["slovo"] * n_words), ref)]
+    max_tokens = 40
+    chunks = hybrid_chunk_document("d1", spans, max_tokens=max_tokens)
+    assert any(c[6] > 1 for c in chunks), "no K4 merge exercised"
+    for _doc, _no, _cid, content, headings, n_tokens, _nu in chunks:
+        recount = hc.count_tokens(content) + sum(hc.count_tokens(h) for h in headings)
+        assert n_tokens == recount, (content, n_tokens, recount)
+        assert n_tokens <= max_tokens, (content, n_tokens)

@@ -27,7 +27,16 @@ _GOLDEN_IDS = sorted(
 
 @pytest.fixture(scope="module")
 def corpus():
-    return dict(synth_corpus(60, seed=42))
+    return _tuple_corpus()
+
+
+def _tuple_corpus():
+    """The synth corpus with each span as the (kind, text, media_ref) tuple
+    extract_document takes."""
+    return {
+        doc_id: [(s["kind"], s["text"], s["media_ref"]) for s in spans]
+        for doc_id, spans in synth_corpus(60, seed=42)
+    }
 
 
 @pytest.mark.parametrize("doc_id", _GOLDEN_IDS)
@@ -54,7 +63,7 @@ def test_no_furniture_survives(corpus):
 
 
 def regen():
-    corpus = dict(synth_corpus(60, seed=42))
+    corpus = _tuple_corpus()
     for doc_id in _GOLDEN_IDS:
         out = extract_document(corpus[doc_id])
         with open(os.path.join(_GOLDEN_DIR, f"{doc_id}.json"), "w") as f:

@@ -222,3 +222,41 @@ def test_semdedup_reuse_plan_recomputes_no_assignment(spark):
     assert "BroadcastNestedLoopJoin" not in plan  # flat-assign fingerprint
     # the assignment sits behind exactly the checkpoint scans
     assert "ExistingRDD" in plan
+
+
+def _span_stages():
+    """Every per-document span stage, as (name, df → stage output)."""
+    from docling_spark.operators import serialize
+    from docling_spark.operators.enrich import enrich
+    from docling_spark.operators.grids import triplets_sink
+    from docling_spark.operators.hybrid_chunker import hybrid_chunk_sink
+    from docling_spark.pipeline import extract, extract_html_formatted
+    from docling_spark.sources.readers import read_doctags
+
+    return [
+        ("extract", extract),
+        ("extract_html_formatted", extract_html_formatted),
+        ("enrich", enrich),
+        ("markdown_sink", serialize.markdown_sink),
+        ("html_sink", serialize.html_sink),
+        ("latex_sink", serialize.latex_sink),
+        ("doctags_sink", serialize.doctags_sink),
+        ("chunk_export_sink", lambda df: serialize.chunk_export_sink(df, "rag")),
+        ("chunk_sink", serialize.chunk_sink),
+        ("hybrid_chunk_sink", hybrid_chunk_sink),
+        ("triplets_sink", triplets_sink),
+        ("read_doctags",
+         lambda df: read_doctags(df.select("doc_id", F.lit("").alias("doctags")))),
+    ]
+
+
+def test_span_stages_are_narrow_map_in_arrow(spark, corpus_path):
+    """Each span stage is one narrow Arrow map over the scan: the executed
+    plan has MapInArrow, no MapInPandas, and no shuffle."""
+    docs = spark.read.parquet(corpus_path)
+    bad = {}
+    for name, stage in _span_stages():
+        plan = _plan(stage(docs))
+        if "MapInArrow" not in plan or "MapInPandas" in plan or "Exchange" in plan:
+            bad[name] = plan
+    assert not bad, "\n\n".join(f"{n}:\n{p}" for n, p in bad.items())

@@ -112,7 +112,8 @@ def test_pdf_reading_order_permutation_invariant(seed, shuffle_seed):
 
 
 def test_extraction_deterministic_and_offsets_dense():
-    for doc_id, spans in synth_corpus(30, seed=7):
+    for doc_id, raw in synth_corpus(30, seed=7):
+        spans = [(s["kind"], s["text"], s["media_ref"]) for s in raw]
         a = extract_document(spans)
         b = extract_document(spans)
         assert a == b
@@ -124,7 +125,8 @@ def test_extraction_deterministic_and_offsets_dense():
 
 def test_extraction_never_emits_raw_kinds():
     raw_only = {"html_bytes", "pdf_cell", "page_footer", "page_header"}
-    for doc_id, spans in synth_corpus(30, seed=11):
+    for doc_id, raw in synth_corpus(30, seed=11):
+        spans = [(s["kind"], s["text"], s["media_ref"]) for s in raw]
         for kind, _, _ in extract_document(spans):
             assert kind not in raw_only
 

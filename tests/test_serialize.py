@@ -60,7 +60,7 @@ def test_chunk_document_paragraph_level():
 
 def test_chunk_and_markdown_over_corpus():
     for doc_id, spans in synth_corpus(20, seed=42):
-        out = extract_document(spans)
+        out = extract_document([(s["kind"], s["text"], s["media_ref"]) for s in spans])
         md = render_markdown(out)
         assert md.strip()
         chunks = chunk_document(doc_id, out, level="odsek")

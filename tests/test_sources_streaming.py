@@ -551,7 +551,7 @@ def test_doctags_roundtrip_over_golden_corpus():
 
     n_tables = 0
     for doc_id, raw in synth_corpus(60, seed=42):
-        spans = extract_document(raw)
+        spans = extract_document([(s["kind"], s["text"], s["media_ref"]) for s in raw])
         got = parse_doctags(render_doctags(spans))
         assert got == _coarsen_for_doctags(spans), f"roundtrip diverged for {doc_id}"
         n_tables += sum(1 for k, _t, _r in got if k == "table_cell")
